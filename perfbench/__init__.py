@@ -1,0 +1,1 @@
+"""Closed-loop benchmark for the spark-graft engine (see perfbench/README.md)."""
